@@ -32,7 +32,7 @@ REPLICAS = 10
 # per-table key columns to offset, with a stride comfortably past the
 # sf0.1 max of each key domain (keys stay BIGINT, no collisions)
 SHIFTS: dict[str, dict[str, int]] = {
-    "events": {"event_id": 10**9, "user_id": 10**6},
+    "events": {"event_id": 10**6, "user_id": 10**6},
     "documents": {"doc_id": 10**7},
     "embeddings": {"vec_id": 10**7},
     "customer": {"c_custkey": 10**6},

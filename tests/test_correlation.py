@@ -153,3 +153,22 @@ def test_spearman_pruned_equals_naive_rank_corr(spark, planted):
     for i in range(3):
         assert (f"exact_{i}a", f"exact_{i}b") in pairs
     vectors.unpersist()
+
+
+@pytest.mark.parametrize("m", [2, 3, 5, 64, 128])
+@pytest.mark.parametrize("k", [1, 4])
+def test_dft_sketch_equals_numpy_rfft(spark, m, k):
+    """The JVM sketch is numpy's scaled rfft prefix, re/im interleaved."""
+    rng = np.random.default_rng(m * 10 + k)
+    xs = [rng.normal(size=m) for _ in range(5)]
+    vectors = spark.createDataFrame(
+        [(f"s{i}", m, [float(v) for v in x]) for i, x in enumerate(xs)],
+        "series_id string, m long, vec array<double>",
+    )
+    got = {r["series_id"]: r["sketch"] for r in dft_sketch(vectors, k).collect()}
+    kk = max(1, min(k, (m - 1) // 2))
+    for i, x in enumerate(xs):
+        coef = np.fft.rfft(x)[1 : kk + 1] * np.sqrt(2.0 / m)
+        want = np.empty(2 * len(coef))
+        want[0::2], want[1::2] = coef.real, coef.imag
+        np.testing.assert_allclose(got[f"s{i}"], want, rtol=0, atol=1e-12)

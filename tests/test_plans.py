@@ -192,6 +192,21 @@ def test_exact_corr_broadcast_guard(spark, monkeypatch):
     vectors.unpersist()
 
 
+def test_corr_report_runs_no_python(spark):
+    """The correlation report (sketch included) runs in the JVM: no
+    Python-evaluation node anywhere in its executed plan, the cached
+    sketch and scored frames included."""
+    from timeseriescorrelation_spark.operators import correlation as C
+
+    aligned = em._aligned_from_events(spark, SF)
+    report, _ = C.corr_report(aligned, 0.5)
+    plan = report._jdf.queryExecution().executedPlan().treeString()
+    assert "InMemoryTableScan" in plan and "cos(" in plan.lower(), plan
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInArrow",
+                 "MapInPandas", "FlatMapGroupsInPandas"):
+        assert node not in plan, plan
+
+
 @pytest.mark.parametrize("qname", ["locf_1h", "interp_1h"])
 def test_gapfill_single_window_shuffle(spark, qname):
     """Gap-fill = union + ONE window pass: exactly one exchange on the

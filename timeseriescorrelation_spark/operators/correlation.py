@@ -15,26 +15,23 @@ pruning pairs with ‖s_a − s_b‖ > ε never drops a reported pair.
 Spark shape (all joins equi-joins; no cartesian):
 1. vectors: groupBy(id) → sorted value array, z-normed with native
    higher-order functions;
-2. sketch: one vectorized pandas_udf (numpy rfft over the whole Arrow
-   batch — the only Python in the operator);
+2. sketch: the first k DFT coefficients as plain cos/sin sums
+   (higher-order functions; no Python anywhere in the operator);
 3. ε-grid: cell = (⌊s₀/ε⌋, ⌊s₁/ε⌋); side A explodes to its 3×3
    neighborhood, side B keeps home cells → pure equi-join on the cell
    pair + id_a < id_b gives each candidate exactly once (J1);
 4. lower-bound filter ‖s_a−s_b‖² ≤ ε² via zip_with/aggregate (JVM);
 5. exact ρ = x̂_a·x̂_b via zip_with/aggregate after two hash joins of
-   candidates to the (small) vectors table — broadcast when it fits.
+   candidates to the (small) vectors table — broadcast when it fits;
+   corr_report scores each candidate once, counters and report alike.
 """
 
 from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def build_vectors(aligned: DataFrame, id_col: str = "series_id") -> DataFrame:
@@ -64,38 +61,32 @@ def build_vectors(aligned: DataFrame, id_col: str = "series_id") -> DataFrame:
     )
 
 
+def _sum(a):
+    return F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)
+
+
 def dft_sketch(vectors: DataFrame, k: int = 4, id_col: str = "series_id") -> DataFrame:
-    """(series_id, m, vec) → (series_id, vec, sketch[2k]) — scaled DFT
-    prefix, one Arrow-vectorized numpy rfft per batch."""
+    """(series_id, m, vec) → (series_id, m, vec, sketch[2kk]) — scaled DFT
+    prefix √(2/m)·[Re X_f, Im X_f], f = 1..kk = max(1, min(k, (m−1)//2)),
+    X_f = Σ_t x_t·e^(−2πi·f·t/m) (numpy rfft) as plain cos/sin sums."""
+    m = F.col("m").cast("double")
+    kk = F.greatest(F.lit(1), F.least(F.lit(k), F.floor((m - 1) / 2).cast("int")))
 
-    @pandas_udf("array<double>")
-    def _sketch(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())  # equal lengths guaranteed
-        m = mat.shape[1]
-        kk = min(k, max((m - 1) // 2, 1))
-        coef = np.fft.rfft(mat, axis=1)[:, 1 : kk + 1] * math.sqrt(2.0 / m)
-        out = np.empty((mat.shape[0], 2 * kk))
-        out[:, 0::2] = coef.real
-        out[:, 1::2] = coef.imag
-        return pd.Series(list(out))
+    def coef(f, trig):
+        return F.sqrt(2.0 / m) * _sum(F.transform(
+            "vec", lambda x, t: x * trig(F.lit(2 * math.pi) * f * t / m)))
 
-    return vectors.select(id_col, "m", "vec", _sketch("vec").alias("sketch"))
+    sketch = F.transform(F.sequence(F.lit(1), kk),
+                         lambda f: F.array(coef(f, F.cos), -coef(f, F.sin)))
+    return vectors.select(id_col, "m", "vec", F.flatten(sketch).alias("sketch"))
 
 
 def _sq_dist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return _sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
 
 
 def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return _sum(F.zip_with(a, b, lambda x, y: x * y))
 
 
 def candidate_pairs(sketches: DataFrame, theta: float,
@@ -141,26 +132,15 @@ def candidate_pairs(sketches: DataFrame, theta: float,
 BROADCAST_MAX_ELEMENTS = 16_000_000
 
 
-def exact_corr(cand: DataFrame, vectors: DataFrame, theta: float,
-               id_col: str = "series_id",
-               broadcast_vectors: bool | None = None,
-               n_elements: int | None = None) -> DataFrame:
-    """Candidates → exact ρ via unit-vector dot product (A4/J2).
-
-    broadcast_vectors: True/False force the plan; None (default)
-    auto-sizes — broadcast only when the vectors table holds at most
-    BROADCAST_MAX_ELEMENTS doubles.  Pass ``n_elements`` (n_series * m)
-    when the caller already knows it (corr_report does, from counters);
-    otherwise one count job on ``vectors`` decides (cache ``vectors``
-    first, as corr_report does, to make that job cheap)."""
+def _score(cand: DataFrame, vectors: DataFrame, id_col: str,
+           broadcast_vectors: bool | None, n_elements: int | None) -> DataFrame:
+    """Candidates → (id_a, id_b, rho) for every candidate, ρ = x̂_a·x̂_b."""
     if broadcast_vectors is None:
         if n_elements is None:
-            # width from the vec column itself (no reliance on an 'm'
-            # column — callers may pass a bare (id, vec) frame); the
-            # engine's vectors are equal-length by construction
-            first = vectors.select(F.size("vec").alias("_w")).first()
-            m_width = int(first["_w"]) if first is not None else 0
-            n_elements = vectors.count() * max(m_width, 1)
+            # width from the vec column itself: callers may pass a bare
+            # (id, vec) frame; the engine's vectors are equal-length
+            n, w = vectors.agg(F.count(F.lit(1)), F.max(F.size("vec"))).first()
+            n_elements = n * (w or 1)
         broadcast_vectors = n_elements <= BROADCAST_MAX_ELEMENTS
     v = vectors.select(F.col(id_col).alias("vid"), "vec")
     if broadcast_vectors:
@@ -171,43 +151,45 @@ def exact_corr(cand: DataFrame, vectors: DataFrame, theta: float,
         .join(v.withColumnRenamed("vec", "vb"),
               cand.id_b == F.col("vid")).drop("vid")
     )
-    return (
-        paired.select(
-            "id_a", "id_b", _dot(F.col("va"), F.col("vb")).alias("rho")
-        )
-        .where(F.col("rho") >= F.lit(theta))
+    return paired.select(
+        "id_a", "id_b", _dot(F.col("va"), F.col("vb")).alias("rho")
     )
+
+
+def exact_corr(cand: DataFrame, vectors: DataFrame, theta: float,
+               id_col: str = "series_id",
+               broadcast_vectors: bool | None = None,
+               n_elements: int | None = None) -> DataFrame:
+    """Candidates → exact ρ via unit-vector dot product (A4/J2), ρ ≥ θ.
+
+    broadcast_vectors: True/False force the plan; None (default)
+    auto-sizes — broadcast only when the vectors table holds at most
+    BROADCAST_MAX_ELEMENTS doubles.  Pass ``n_elements`` (n_series * m)
+    when the caller already knows it (corr_report does); otherwise one
+    aggregate job on ``vectors`` decides (cache ``vectors`` first, as
+    corr_report does, to make that job cheap)."""
+    scored = _score(cand, vectors, id_col, broadcast_vectors, n_elements)
+    return scored.where(F.col("rho") >= F.lit(theta))
 
 
 def corr_report(aligned: DataFrame, theta: float, k: int = 4,
                 id_col: str = "series_id",
                 broadcast_vectors: bool | None = None) -> tuple[DataFrame, dict]:
     """Full tiered operator.  Returns (report_df sorted by ρ desc,
-    pruning counters) — counters trigger computation (A5)."""
+    pruning counters) — counters trigger computation (A5).  Candidates
+    are scored once into a cache that the counters and the report read."""
     from timeseriescorrelation_spark.session import cache_once
 
-    vectors = cache_once(
-        dft_sketch(build_vectors(aligned, id_col), k, id_col)
-    )
-    n = vectors.count()
-    first = vectors.select("m").first()
-    m_width = int(first["m"]) if first is not None else 1
-    cand = candidate_pairs(vectors, theta, id_col)
-    cand = cache_once(cand)
-    n_checked = cand.count()
-    report = exact_corr(
-        cand, vectors, theta, id_col, broadcast_vectors,
-        n_elements=n * m_width,
-    ).orderBy(F.desc("rho"), "id_a", "id_b")
-    n_reported = report.count()
-    counters = {
-        "n_series": n,
-        "all_pairs": n * (n - 1) // 2,
-        "checked": n_checked,
-        "reported": n_reported,
-        "pruned": n * (n - 1) // 2 - n_checked,
-    }
-    return report, counters
+    vectors = cache_once(dft_sketch(build_vectors(aligned, id_col), k, id_col))
+    n, m = vectors.agg(F.count(F.lit(1)), F.max("m")).first()
+    scored = cache_once(_score(candidate_pairs(vectors, theta, id_col), vectors,
+                               id_col, broadcast_vectors, n * (m or 1)))
+    hit = F.col("rho") >= F.lit(theta)
+    checked, reported = scored.agg(F.count(F.lit(1)), F.count_if(hit)).first()
+    report = scored.where(hit).orderBy(F.desc("rho"), "id_a", "id_b")
+    all_pairs = n * (n - 1) // 2
+    return report, {"n_series": n, "all_pairs": all_pairs, "checked": checked,
+                    "reported": reported, "pruned": all_pairs - checked}
 
 
 def corr_naive(aligned: DataFrame, theta: float,

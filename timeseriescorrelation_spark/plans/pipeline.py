@@ -52,21 +52,25 @@ def align_relative(
     conv with ≥ m grid steps, keep exactly steps 0..m-1 since its first
     grid point.  Output (series_id, grid_ts, value) where grid_ts is the
     synthetic relative step index as a timestamp base-2000 epoch (any
-    shared monotone axis works — build_vectors only sorts by it)."""
-    s = filled.where(F.col("metric") == metric)
-    w = Window.partitionBy("conv_id")
-    first_ts = F.min("grid_ts").over(w)
+    shared monotone axis works — build_vectors only sorts by it).  The
+    first grid_ts comes from a broadcast per-conv min, so only the ≤ m
+    leading steps per conv reach the one shuffle (the count == m check)."""
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
+    s = filled.where(F.col("metric") == metric)
+    first = s.groupBy("conv_id").agg(
+        epoch_us(F.min("grid_ts")).alias("first_us")
+    )
     idx = (
-        (epoch_us(F.col("grid_ts")) - epoch_us(first_ts))
+        (epoch_us(F.col("grid_ts")) - F.col("first_us"))
         / F.lit(int(step_seconds * 1e6))
     ).cast("long")
-    s = s.withColumn("step", idx).where(F.col("step") < m)
-    counts = s.groupBy("conv_id").agg(F.count("*").alias("n"))
-    full = counts.where(F.col("n") == m).select("conv_id")
     return (
-        s.join(full, "conv_id", "left_semi")
+        s.join(F.broadcast(first), "conv_id")
+        .withColumn("step", idx)
+        .where(F.col("step") < m)
+        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("conv_id")))
+        .where(F.col("n") == m)
         .select(
             F.col("conv_id").alias("series_id"),
             F.timestamp_seconds(F.lit(946684800) + F.col("step") * 60).alias(
